@@ -4,12 +4,12 @@ import org.apache.spark.sql.SparkSession
 import graft.engine.GraftDb
 import graft.command.{Json, Value}
 import java.io.PrintWriter
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import scala.util.Random
 
-/** Journal crash-replay differential fuzzer (VERDICT r12 #4) — the
-  * Raft-log analog of FaultSoak, run against REAL process death:
+/** Journal crash-replay differential fuzzer — the Raft-log analog of
+  * FaultSoak, run against REAL process death:
   *
   *  1. generate a seeded OltpFuzz batch and run it in a CHILD engine JVM
   *     against a disk-rooted GraftDb, one statement per execute() (each
@@ -32,40 +32,20 @@ import scala.util.Random
   * always holds the batch's full committed history.
   *
   * Usage: runMain graft.CrashReplayFuzz <outFile> <seedStart> <count>
-  * Env: GRAFT_JAR (default target/scala-2.13/dustspark_2.13-0.1.0.jar)
   */
 object CrashReplayFuzz {
-
-  private val addOpens: Seq[String] = {
-    val base = Seq("java.lang", "java.lang.invoke", "java.lang.reflect",
-      "java.io", "java.net", "java.nio", "java.util",
-      "java.util.concurrent", "java.util.concurrent.atomic")
-      .map(p => s"java.base/$p")
-    val sun = Seq("sun.nio.ch", "sun.nio.cs", "sun.security.action",
-      "sun.util.calendar").map(p => s"java.base/$p")
-    (base ++ sun).flatMap(m => Seq("--add-opens", s"$m=ALL-UNNAMED"))
-  }
 
   def main(args: Array[String]): Unit = {
     val outFile = args(0)
     val seedStart = args(1).toLong
     val count = args(2).toInt
-    val jar = sys.env.getOrElse("GRAFT_JAR",
-      "target/scala-2.13/dustspark_2.13-0.1.0.jar")
-    val sparkJars = sys.env.getOrElse("SPARK_JARS_DIR", "/opt/spark/jars")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.driver()
     val w = new PrintWriter(outFile)
     var harnessErrs = 0
     try {
       (0 until count).foreach { i =>
         val seed = seedStart + i
-        try w.println(runSeed(spark, seed, jar, sparkJars))
+        try w.println(runSeed(spark, seed))
         catch {
           case e: Throwable =>
             harnessErrs += 1
@@ -84,8 +64,7 @@ object CrashReplayFuzz {
     if (harnessErrs > 0) sys.exit(2)
   }
 
-  private def runSeed(spark: SparkSession, seed: Long, jar: String,
-                      sparkJars: String): String = {
+  private def runSeed(spark: SparkSession, seed: Long): String = {
     val ops = tools.OltpFuzz.gen(seed).filter(o =>
       o.kind == "x" || o.kind == "q")
     val dir = Files.createTempDirectory("graft-crash-")
@@ -101,16 +80,8 @@ object CrashReplayFuzz {
       val killAt = rng.nextInt(ops.size)
       val cap = if (seed % 2 == 0) 500L else 8L
 
-      val cmd = (Seq("java") ++ addOpens ++ Seq(
-        "-Xmx4g", "-XX:ReservedCodeCacheSize=256m",
-        "-Dspark.ui.enabled=false",
-        "-cp", s"$jar:$sparkJars/*",
-        "graft.CrashReplayChild",
-        dbPath.toString, stmtFile.toString, cap.toString)).asJava
-      val pb = new ProcessBuilder(cmd)
-      pb.redirectErrorStream(false)
-      pb.redirectError(ProcessBuilder.Redirect.DISCARD)
-      val proc = pb.start()
+      val proc = ChildJvm.start("graft.CrashReplayChild",
+        dbPath.toString, stmtFile.toString, cap.toString)
       val reader = new java.io.BufferedReader(
         new java.io.InputStreamReader(proc.getInputStream))
       var applied = -1
@@ -173,7 +144,7 @@ object CrashReplayFuzz {
         sb.toString
       } finally db.close()
     } finally {
-      try deleteTree(dir) catch { case _: Exception => }
+      try ChildJvm.deleteTree(dir) catch { case _: Exception => }
     }
   }
 
@@ -183,14 +154,6 @@ object CrashReplayFuzz {
     case Value.Real(d) => d.toString
     case Value.Text(t) => Json.escapeQ(t)
     case other => Json.escapeQ(s"!nonfuzz:$other")
-  }
-
-  private def deleteTree(p: Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      try s.forEach(deleteTree) finally s.close()
-    }
-    Files.deleteIfExists(p)
   }
 }
 
@@ -202,13 +165,7 @@ object CrashReplayChild {
     val dbPath = args(0)
     val stmtFile = args(1)
     val cap = args(2).toLong
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.driver("local[2]")
     val db = GraftDb.open(spark, dbPath, cap)
       .fold(e => sys.error(s"child open failed: $e"), identity)
     val lines = Files.readAllLines(Paths.get(stmtFile)).asScala
@@ -234,7 +191,7 @@ object CrashReplayChild {
       val sql = l.substring(sep + 1)
       // journal length BEFORE the statement: a cap refusal on an op that
       // appended no line (e.g. a query-path RETURNING cap) must NOT mark
-      // the PREVIOUS statement's genuinely-applied line (ADVICE r13)
+      // the PREVIOUS statement's genuinely-applied line
       val before = jLines()
       val errMsg =
         if (kind == "q")
@@ -247,7 +204,7 @@ object CrashReplayChild {
       }
       // stdout marker AFTER the statement's journal append + apply; the
       // journal length rides along so the checker knows which journal
-      // lines belong to ACKNOWLEDGED statements (ADVICE r13: drop_tail
+      // lines belong to ACKNOWLEDGED statements (drop_tail
       // recovery is only legitimate for an UNacknowledged tail)
       println(s"GRAFT-APPLIED $i $after")
       Console.out.flush()

@@ -1,16 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.security.MessageDigest
 
-/** Fault-injection soak for `reliable` stage materialization (VERDICT
-  * r10 #2 / r11 #4): run a corpus-scale shared-stage query on a REAL
-  * multi-JVM master (`local-cluster[2,16,...]`), kill one executor JVM
-  * mid-flight with SIGKILL, and assert the query completes with a result
-  * byte-identical to the clean run. `reliable` checkpoints stage frames
-  * to the Spark checkpoint dir precisely so an executor loss cannot lose
-  * the materialized stage — this is the first test that actually severs
-  * an executor to prove it.
+/** Fault-injection soak for `reliable` stage materialization: run a
+  * corpus-scale shared-stage query on a REAL multi-JVM master
+  * (`local-cluster[2,16,...]`), kill one executor JVM mid-flight with
+  * SIGKILL, and assert the query completes with a result byte-identical
+  * to the clean run. `reliable` checkpoints stage frames to the Spark
+  * checkpoint dir precisely so an executor loss cannot lose the
+  * materialized stage; this soak severs an executor to prove it.
   *
   * Usage: runMain graft.FaultSoak [query1,query2] (default x54,x75)
   *   env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
@@ -23,15 +21,8 @@ object FaultSoak {
     val queries = (if (args.nonEmpty) args(0).split(",").toSeq
                    else Seq("x54_ngram_jaccard", "x75_components"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER",
-      "local-cluster[2,16,16384]")
-    val spark = Sessions.withMaster(SparkSession.builder(), master)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.driver(sys.env.getOrElse("SPARK_GRAFT_MASTER",
+      "local-cluster[2,16,16384]"))
     Tables.ensure(spark, sfDir)
 
     var allOk = true

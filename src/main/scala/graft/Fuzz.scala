@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import java.io.PrintWriter
 import java.security.MessageDigest
 
-/** Differential-testing driver, Spark side (VERDICT r10 #1): generate
+/** Differential-testing driver, Spark side: generate
   * seeded random Spark∩DuckDB queries (graft.tools.SqlFuzz), run each on
   * Spark over the testdata views, and emit one JSON line per query with an
   * order-insensitive canonical result digest. tools/check_fuzz.py replays
@@ -26,15 +26,7 @@ object Fuzz {
     val outFile = args(1)
     val seedStart = args(2).toLong
     val count = args(3).toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.driver()
     Tables.ensure(spark, sfDir)
     registerFuzzViews(spark)
     val w = new PrintWriter(outFile)

@@ -6,7 +6,7 @@ import graft.command.{Json, Value}
 import java.io.PrintWriter
 import java.nio.file.Files
 
-/** Differential OLTP fuzz driver, engine side (VERDICT r11 #3): generate
+/** Differential OLTP fuzz driver, engine side: generate
   * seeded random DDL+DML+tx batches (graft.tools.OltpFuzz), run each
   * against GraftDb, and emit one JSON line per seed with the full
   * envelope trace. tools/check_oltp.py replays the same statements in a
@@ -32,15 +32,7 @@ object OltpFuzzRun {
     val outFile = args(0)
     val seedStart = args(1).toLong
     val count = args(2).toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.driver()
     val w = new PrintWriter(outFile)
     var harnessErrs = 0
     try {

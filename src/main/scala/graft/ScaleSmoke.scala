@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 
-/** Committed scale-smoke harness (VERDICT r9 next-round #1): the sf ladder
+/** Committed scale-smoke harness: the sf ladder
   * multiplies rows inside a FIXED 31-word vocabulary, so it can never
   * exercise the ≥64-rank mask arithmetic or show whether the dedup/graph
   * family's cost actually scales with corpus size. This harness does both,
@@ -18,17 +18,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
   *     density is constant and work should grow ~linearly in corpus size.
   *     (A naive replication sharing one vocabulary multiplies near-dup
   *     density N× per doc — output legitimately grows quadratically and
-  *     measures worst-case density, not the plan; BASELINE.md r9.)
+  *     measures worst-case density, not the plan; see BASELINE.md.)
   *  2. **Runner** — executes the dedup/graph/sketch family at each level
   *     (ascending), single timed run per query per level after a codegen
   *     warmup pass, and asserts (a) zero failures and (b) ≤ linear growth:
   *     `t_N ≤ slack · (N / N₀) · t_N₀` with slack defaulting to 1.5 (the
-  *     documented ±30% shared-VM noise band plus headroom; every measured
-  *     r9 ratio was 0.3–0.9× of linear).
+  *     documented ±30% shared-VM noise band plus headroom; measured
+  *     ratios sit at 0.3–0.9× of linear).
   *
-  * The r9 ad-hoc version of exactly this run found the only two real bugs
-  * of that round (ANSI long overflows in the PPJoin prefix masks that no
-  * sf-ladder vocabulary can reach — `Dedup.scala`, DedupWideVocabSpec).
+  * Its disjoint per-copy vocabularies are the only inputs wide enough to
+  * reach the PPJoin prefix-mask arithmetic past 64 ranks and its ANSI
+  * long-overflow edges (`Dedup.scala`, DedupWideVocabSpec).
   *
   * Usage:
   * {{{
@@ -40,7 +40,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
   * SPARK_GRAFT_SCALE_SLACK (linear-growth slack, default 1.5),
   * SPARK_GRAFT_WARM_DIR (codegen warmup, default sf0.001),
   * SPARK_GRAFT_MASTER (e.g. the local-cluster soak master — executor
-  * classpath + SPARK_GRAFT_EXEC_MEM wired by [[Sessions.withMaster]]),
+  * classpath + SPARK_GRAFT_EXEC_MEM wired by [[Sessions.driver]]),
   * SPARK_GRAFT_JAVA_OPTS (extra -D flags for the forked JVM, e.g.
   * -Dgraft.stageMaterialize=reliable to soak a materialization mode).
   * Prints ONE JSON line; exit 1 on any failure or superlinear query.
@@ -56,7 +56,7 @@ object ScaleSmoke {
     "x84_edit_distance", "x89_para_dedup", "x92_substring_dup",
     "x108_keep_best", "x114_boilerplate")
 
-  /** The event-analytics family (VERDICT r11 #5): state keyed on
+  /** The event-analytics family: state keyed on
     * user_id/source, so an N×-users corpus with constant per-user event
     * density must grow ≤ linearly. (q93/q94 read orders/lineitem — the
     * TPC-H sf ladder already scales those; q95 reads documents, which the
@@ -127,7 +127,6 @@ object ScaleSmoke {
     val base = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft-scale")
     val slack = sys.env.getOrElse("SPARK_GRAFT_SCALE_SLACK", "1.5").toDouble
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val levels = (if (args.nonEmpty) args(0) else "1,8")
       .split(",").map(_.trim.toInt).toSeq.sorted
     val names =
@@ -135,14 +134,7 @@ object ScaleSmoke {
       else family ++ eventFamily
     require(levels.nonEmpty && names.nonEmpty)
 
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = Sessions.withMaster(SparkSession.builder()
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false"), master).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.driver()
 
     // codegen + JIT warmup (plan shape is scale-independent)
     names.foreach { q =>

@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.engine.GraftDb
 import graft.command.Value
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
-/** Streaming-ingest fault soak (VERDICT r12 #5): prove the
+/** Streaming-ingest fault soak: prove the
   * [[graft.streaming.JournalIngest]] exactly-once contract under REAL
   * process death, not simulated re-delivery.
   *
@@ -23,26 +22,14 @@ import scala.jdk.CollectionConverters._
   * Exit 1 on any mismatch — committable as a gate like ScaleSmoke.
   *
   * Usage: runMain graft.StreamSoak [kills]   (default 3)
-  * Env: GRAFT_JAR (default target/scala-2.13/dustspark_2.13-0.1.0.jar)
   */
 object StreamSoak {
-
-  private val addOpens: Seq[String] = {
-    val pkgs = Seq("java.lang", "java.lang.invoke", "java.lang.reflect",
-      "java.io", "java.net", "java.nio", "java.util",
-      "java.util.concurrent", "java.util.concurrent.atomic",
-      "sun.nio.ch", "sun.nio.cs", "sun.security.action", "sun.util.calendar")
-    pkgs.flatMap(p => Seq("--add-opens", s"java.base/$p=ALL-UNNAMED"))
-  }
 
   private val Files_ = 10
   private val RowsPerFile = 20
 
   def main(args: Array[String]): Unit = {
     val kills = if (args.nonEmpty) args(0).toInt else 3
-    val jar = sys.env.getOrElse("GRAFT_JAR",
-      "target/scala-2.13/dustspark_2.13-0.1.0.jar")
-    val sparkJars = sys.env.getOrElse("SPARK_JARS_DIR", "/opt/spark/jars")
     val dir = Files.createTempDirectory("graft-streamsoak-")
     val srcDir = dir.resolve("src"); Files.createDirectories(srcDir)
     val dbPath = dir.resolve("db")
@@ -59,15 +46,8 @@ object StreamSoak {
     val expectedSum = total.toLong * (total - 1) / 2
 
     def runChild(killAtWm: Option[Long]): (Int, Long) = {
-      val cmd = (Seq("java") ++ addOpens ++ Seq(
-        "-Xmx4g", "-XX:ReservedCodeCacheSize=256m",
-        "-Dspark.ui.enabled=false",
-        "-cp", s"$jar:$sparkJars/*",
-        "graft.StreamSoakChild",
-        dbPath.toString, ckpt.toString, srcDir.toString)).asJava
-      val pb = new ProcessBuilder(cmd)
-      pb.redirectError(ProcessBuilder.Redirect.DISCARD)
-      val proc = pb.start()
+      val proc = ChildJvm.start("graft.StreamSoakChild",
+        dbPath.toString, ckpt.toString, srcDir.toString)
       val reader = new java.io.BufferedReader(
         new java.io.InputStreamReader(proc.getInputStream))
       var wm = -1L
@@ -102,11 +82,7 @@ object StreamSoak {
     println(s"[stream-soak] final run: rc=$rc watermark=$wm")
 
     // verify the exactly-once end state in THIS JVM
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.driver()
     val db = GraftDb.open(spark, dbPath.toString, 100000L)
       .fold(e => sys.error(s"verify open failed: $e"), identity)
     def one(sql: String): Long =
@@ -121,16 +97,8 @@ object StreamSoak {
     println(s"""{"streamSoak":${if (ok) "\"pass\"" else "\"FAIL\""},""" +
       s""""kills":$kills,"rows":$count,"distinct":$distinct,"sum":$sum,""" +
       s""""expectedRows":$total,"expectedSum":$expectedSum}""")
-    try deleteTree(dir) catch { case _: Exception => }
+    try ChildJvm.deleteTree(dir) catch { case _: Exception => }
     if (!ok) sys.exit(1)
-  }
-
-  private def deleteTree(p: Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      try s.forEach(deleteTree) finally s.close()
-    }
-    Files.deleteIfExists(p)
   }
 }
 
@@ -142,11 +110,7 @@ object StreamSoakChild {
     val dbPath = args(0)
     val ckpt = args(1)
     val srcDir = args(2)
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.driver("local[2]")
     val db = GraftDb.open(spark, dbPath, 100000L)
       .fold(e => sys.error(s"child open failed: $e"), identity)
     db.executeStringStmt(

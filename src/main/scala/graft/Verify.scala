@@ -1,8 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.command.Json.escapeQ
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare
+  * (tools/check_oracle.py). Ends with one stdout line
+  * `{"verify":"summary","ok":N,"failed":[…],"missing":[…]}`, where
+  * `missing` lists the queries with no output dir.
+  *
+  * SPARK_GRAFT_MASTER='local-cluster[2,16,16384]' (with SPARK_HOME set so
+  * the workers can launch executors) runs it on separate executor JVMs,
+  * driving the serialization/broadcast paths local[N] never exercises. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [comma-separated query subset — dev only;
@@ -10,46 +19,36 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val subset: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER overrides the master URL — the local-cluster soak
-    // (`local-cluster[2,16,16384]`, separate executor JVMs) drives the
-    // serialization/broadcast paths local[N] never exercises; needs
-    // SPARK_HOME set so the workers can launch executors.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // see Bench: the 100-entry default codegen cache thrashes at suite
-      // size; static conf, first-session-only
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-    val spark = Sessions.withMaster(builder, master).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.driver()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val ran = SparkEntry.queries.toSeq
       .filter { case (name, _) => subset.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failed = ran.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // every string is escaped, control chars included — a tab or CR in
+    // hand-written SQL would otherwise make the oracle checker's json.load
+    // fail and silently zero the correctness check
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${escapeQ(k)}: ${escapeQ(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    val missing = SparkEntry.queries.keys
+      .filterNot(n => Files.isDirectory(Paths.get(outDir, n)))
+    println(summaryLine(ran.size - failed.size, failed, missing))
+  }
+
+  def summaryLine(ok: Int, failed: Iterable[String],
+                  missing: Iterable[String]): String = {
+    def arr(names: Iterable[String]) =
+      names.toSeq.sorted.map(escapeQ).mkString("[", ",", "]")
+    s"""{"verify":"summary","ok":$ok,"failed":${arr(failed)},"missing":${arr(missing)}}"""
   }
 }

@@ -119,7 +119,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   // the connection's last_insert_rowid
   private var lidSuppressed = false
   private def noteLid(rid: Long): Unit = if (!lidSuppressed) lastRowId = rid
-  // SQLite's changes()/total_changes() registers (VERDICT r14 #1): the
+  // SQLite's changes()/total_changes() registers: the
   // most recent top-level INSERT/UPDATE/DELETE's row count, and the
   // connection-lifetime total. Trigger-body DML counts into the total
   // only — SQLite's changes() is "exclusive of statements in lower-level
@@ -189,7 +189,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
 
   // ---------- public API (the store seam, reference store/src/lib.rs:7-28) --
 
-  // Exclusive root ownership (ADVICE r10): open() takes a file lock on the
+  // Exclusive root ownership: open() takes a file lock on the
   // root so a second open — same or another process — is refused instead of
   // sweeping the live instance's big/ bucket files out from under it.
   // Released at close(); the OS releases it if the process dies. SQLite's
@@ -962,9 +962,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     else friendlyError(e)
 
   private def friendlyError(e: Exception): String = {
-    if (sys.props.contains("graft.debugErrors")) e.printStackTrace()
     // Engine-raised errors travel wrapped when they fire inside UDF
-    // evaluation ([FAILED_EXECUTE_UDF] … Lambda$… noise, VERDICT r14):
+    // evaluation ([FAILED_EXECUTE_UDF] … Lambda$… noise):
     // walk the cause chain and surface the clean engine message.
     var cause: Throwable = e
     while (cause != null) {
@@ -1122,7 +1121,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
         }
         // SQLite numbers automatic indexes in SOURCE order (column-level
         // constraints in column order, the table-level PK clause at its
-        // declared position — probed live, ADVICE r13)
+        // declared position — probed live)
         td.autoIndexSpecs.foreach { case (isPk, cs) => emitAuto(isPk, cs) }
         val named = indexes.values.toVector
           .filter(_.table.equalsIgnoreCase(td.name))
@@ -1830,7 +1829,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
             case _: TriggerDiffTooLarge =>
               // statement-level atomicity: undo the outer DML before
               // failing — the table state is exactly as before the
-              // statement (VERDICT r10 #4)
+              // statement
               work.clear(); tablesBackup.foreach { case (k, v) => work(k) = v }
               indexes = idxBackup; viewDefs = viewBackup; triggers = trigBackup
               return Left(s"too many rows for row-trigger processing on " +
@@ -2497,7 +2496,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   }
 
   // ---------- partial & expression unique indexes -------------------------
-  // `CREATE UNIQUE INDEX … ON t(expr[, …]) [WHERE pred]` (VERDICT r12 #2).
+  // `CREATE UNIQUE INDEX … ON t(expr[, …]) [WHERE pred]`.
   // These cannot key the slice/window machinery (their keys are computed,
   // their row set predicate-filtered), so they enforce as a FINAL-STATE
   // duplicate scan: exact for the plain ABORT paths (insert, update, bulk),
@@ -3247,7 +3246,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
           val ordByRid = mini.map { case (rid, (o, _)) => rid -> o }.toMap
           // REPLACE = delete + re-insert: a landed candidate moves to the
           // END of the table exactly like the Mem vector path (and fires
-          // its INSERT trigger in candidate order — ADVICE r12 #5), so an
+          // its INSERT trigger in candidate order), so an
           // overwriting candidate takes a FRESH tail __ord instead of the
           // displaced row's. Upsert DO UPDATE rows update in place and
           // keep theirs.
@@ -3384,8 +3383,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     import org.apache.spark.sql.functions.{max, row_number}
     policy match {
       case Conflict.Abort | Conflict.Fail =>
-        // Per-ROW precedence (SQLite, probed live — the r11 set-wise
-        // NOT NULL-first ordering was wrong, caught by the OLTP fuzzer):
+        // Per-ROW precedence (SQLite, probed live — a set-wise
+        // NOT NULL-first ordering is wrong, as the OLTP fuzzer shows):
         // the EARLIEST failing candidate decides; a row violating several
         // constraints reports NOT NULL → CHECK → UNIQUE → FK. Each leg is
         // a min(__ord) aggregate — the same job shapes as the old
@@ -3883,7 +3882,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
                 else Option(bigParts.get(big.df)) match {
                   case None =>
                     bigPartitionedFull(td.name, newDf, big.n, big.nextOrd)
-                  // Defense in depth (ADVICE r10): the scoped path evaluates
+                  // Defense in depth: the scoped path evaluates
                   // `cond` in separate jobs (touched-pid scan, bucket
                   // rewrite) — a non-deterministic predicate could match
                   // different rows per pass and lose writes in buckets
@@ -5650,8 +5649,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     * mutation paths (no [[bigParts]] entry → the next UPDATE/DELETE
     * re-buckets the transformed schema) yet keeps reading the parent's
     * generation files. Keyed by frame identity like [[bigParts]]; consulted
-    * ONLY by [[sweepBigGenerations]]'s referenced-set (ADVICE r11 — the
-    * sweep previously deleted those files under the live frame). */
+    * ONLY by [[sweepBigGenerations]]'s referenced-set, so the sweep never
+    * deletes those files under the live frame. */
   private val bigDirPins =
     new java.util.IdentityHashMap[DataFrame, Set[String]]()
 
@@ -5733,8 +5732,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   private val bigGenGrace: Int =
     math.max(1, sys.props.getOrElse("graft.bigGenGrace", "2").toInt)
 
-  /** Refcount-sweep superseded Big bucket generations at checkpoint time
-    * (ADVICE r10): a generation dir no live version references — working,
+  /** Refcount-sweep superseded Big bucket generations at checkpoint time:
+    * a generation dir no live version references — working,
     * committed, open-tx, savepoint — is unreachable by any future
     * statement, so a long-running server no longer grows disk without
     * bound between restarts. Safety: (a) referenced dirs come from the
@@ -5878,7 +5877,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
 
   /** Thrown when a trigger-armed statement's changed-row set exceeds the
     * driver cap — caught in [[withTriggers]], which restores the backup and
-    * fails the statement loudly (VERDICT r10 #4). */
+    * fails the statement loudly. */
   private final class TriggerDiffTooLarge extends RuntimeException
 
   /** Collect at most [[maxDriverRows]] diff rows; beyond that, row-trigger
@@ -5888,8 +5887,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   /** Collect at most `cap` rows; one over throws. Callers thread a running
     * budget through consecutive legs (added/changed/removed) so the
     * COMBINED driver-side row count stays ≤ [[maxDriverRows]] — capping
-    * each leg independently would admit up to 3× the stated bound
-    * (ADVICE r11). */
+    * each leg independently would admit up to 3× the stated bound. */
   private def collectCapped(df: DataFrame, cap: Long): Seq[Row] = {
     val c = math.min(math.max(cap, 0L), Int.MaxValue - 2L).toInt
     val rows = df.limit(c + 1).collect()
@@ -6080,7 +6078,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     val rows = Vector.newBuilder[Row]
     var page = 2L
     // TEMP tables live in SQLite's separate temp schema (sqlite_temp_master),
-    // not in sqlite_master (probed live; ADVICE r14)
+    // not in sqlite_master (probed live)
     work.values.filterNot(_.temp).foreach { ts =>
       val td = ts.d
       rows += Row("table", td.name, td.name, page, ts.createSql)
@@ -6098,7 +6096,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
           page += 1
         }
       }
-      // same source-order numbering as indexRoster (ADVICE r13)
+      // same source-order numbering as indexRoster
       td.autoIndexSpecs.foreach { case (isPk, _) => emitAuto(isPk) }
     }
     indexes.values.foreach { ix =>
@@ -6162,7 +6160,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   // growth, DOC/DESIGN.md:54-55's "configurable number of changes"). Each
   // checkpoint is a Spark parquet write (~0.3 s even for tiny tables), so
   // a small cadence dominates single-row OLTP throughput: at 64 it charged
-  // ~4.7 ms to every insert (measured via OltpBench — 194 ops/sec where
+  // ~4.7 ms to every insert (measured: 194 single-row INSERTs/sec where
   // the statement apply itself costs ~0.3 ms); 512 keeps replay bounded at
   // a few hundred statements (sub-second with the literal fast path) while
   // the amortized snapshot cost drops under the apply cost.
@@ -6216,7 +6214,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     version += 1
     val vdir = r.resolve(s"v$version")
     Files.createDirectories(vdir)
-    // TEMP tables are connection-scoped and never durable (ADVICE r14):
+    // TEMP tables are connection-scoped and never durable:
     // they are excluded from the snapshot and the manifest below, so a
     // restart — which is a new connection — never resurrects one.
     tables.values.filterNot(_.temp).foreach { ts =>
@@ -6279,9 +6277,9 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       if (v <= version - retainVersions) deleteRecursively(r.resolve(s"v$v"))
     }
     // Big bucket generations superseded by partition-scoped mutations are
-    // refcount-swept on the same cadence (ADVICE r10 — previously deferred
-    // entirely to the next open(), unbounded disk growth for a long-lived
-    // server issuing scoped UPDATE/DELETEs)
+    // refcount-swept on the same cadence — deferring them to the next
+    // open() would grow disk without bound for a long-lived server issuing
+    // scoped UPDATE/DELETEs
     sweepBigGenerations(r)
   }
 
@@ -6525,8 +6523,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     savepoints.clear()
     // TEMP tables replayed from the journal (CREATE TEMP TABLE + its DML
     // are journaled like any statement) belonged to the DEAD connection —
-    // drop them now that replay is done (ADVICE r14: they must never
-    // survive a restart as permanent tables)
+    // drop them now that replay is done (they must never survive a
+    // restart as permanent tables)
     val replayedTemps = tables.collect { case (k, ts) if ts.temp => k }
     replayedTemps.foreach(tables.remove)
     // a reopened database is a NEW connection: its changes()/
@@ -6558,7 +6556,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
         // Left, not on throw), so the retry must NOT re-run on state the
         // first attempt may have partially mutated — snapshot the
         // working tables + schema registries first and restore them
-        // before retrying (ADVICE r13: a succeeding retry could
+        // before retrying (a succeeding retry could
         // otherwise silently double-apply rows into recovered state).
         // Store values are immutable, so copyState is a reference copy.
         val preWork = work.map { case (k, v) => k -> v.copyState }
@@ -6631,7 +6629,7 @@ object GraftDb {
       Files.createDirectories(p)
       // Exclusive root lock BEFORE load(): load() sweeps stale big/ bucket
       // files, which must never happen while another live instance (this
-      // JVM or another process) still serves reads from them (ADVICE r10).
+      // JVM or another process) still serves reads from them.
       val ch = java.nio.channels.FileChannel.open(p.resolve(".graft.lock"),
         StandardOpenOption.CREATE, StandardOpenOption.WRITE)
       val lk =

@@ -398,7 +398,7 @@ object Extensions {
 
     // x49 (B73) language identification via per-language stopword hit counts
     // — pure higher-order-function pipeline, one scan, no shuffle.
-    // r15 Spark side: stop-list hit counting via the codegen count_in
+    // Spark side: stop-list hit counting via the codegen count_in
     // kernel — size(filter(toks, x -> x IN (...))) evaluated its lambda
     // interpreted per token, four lists deep. Same counts (exact string
     // equality), pinned in TokenStatsSpec.
@@ -580,7 +580,7 @@ object Extensions {
     // ~|doc|/w elements — the standard sublinear copy-detection sketch.
     // Outputs are scalar summaries (count/min/modular sum) per the
     // no-nested-output-columns convention.
-    // r15 Spark side: the whole per-doc derivation (char hash -> rolling
+    // Spark side: the whole per-doc derivation (char hash -> rolling
     // k-gram hash -> window-4 minima -> distinct -> count/min/modsum) is
     // a pure function of the doc's own token array, so it runs MAP-ONLY
     // in the codegen'd winnow_fp kernel — the previous formulation paid
@@ -699,7 +699,7 @@ object Extensions {
     // Spark generates a DESCENDING range when start > stop, so ntoks = 1
     // must not build bigram indexes; single-token docs take
     // top_bi_frac = 0 via COALESCE.
-    // r15 Spark side: top_uni/top_bi = max_freq (max multiplicity, the
+    // Spark side: top_uni/top_bi = max_freq (max multiplicity, the
     // codegen kernel) — identical by definition to the longest equal run
     // of the SORTED array the interpreted aggregate() scans computed,
     // without the two array_sort passes or the per-token lambdas; the
@@ -1536,7 +1536,7 @@ object Extensions {
     // (u16 * 10000 < p_bps * 65536) so the sampled booleans hash-compare
     // exactly. Per-token log terms ROUND→DECIMAL before SUM — the suite's
     // order-independent FP-aggregation pattern (see x78).
-    // r16 Spark side: src and tgt fused into ONE token aggregate (tgt's
+    // Spark side: src and tgt fused into ONE token aggregate (tgt's
     // per-token count rides as a conditional COUNT column — guide §2.3
     // "aggregate before you shuffle"), removing the second corpus
     // scan+explode+aggregate AND the src⟕tgt join; COALESCE(g.c, 0) ≡ the
@@ -1657,7 +1657,7 @@ object Extensions {
     // logit is assembled from integer-derived ratios FLOOR-rounded at 4dp
     // before the sigmoid so both engines see identical inputs; p lands in
     // basis points (integer) and the keep decision compares integers.
-    // r15 Spark side: wchars/alpha_words/stop_hits via the codegen
+    // Spark side: wchars/alpha_words/stop_hits via the codegen
     // sum_lengths/count_rlike/count_in kernels (the HOF lambdas evaluated
     // interpreted per token; parity pinned in TokenStatsSpec).
     Q("x102_quality_score",
@@ -1851,12 +1851,12 @@ object Extensions {
     * buffer for exact DISTINCT grows with cardinality; HLL stays 4 KB) —
     * and the anchor's ±10% boolean is exactly what certifies that swap.
     *
-    * r16 re-examination (VERDICT item 6) — the single-pass unpivot
+    * The single-pass unpivot is
     * REFUTED with numbers: `stack` the 5 columns into (col, vnum, vstr),
     * pre-aggregate to distinct (col, value, cnt), one 5-group rollup.
     * Oracle-green (HLL over distinct values is register-identical), scans
     * 5 → 1, exchanges 20 → 3 — but measured SLOWER on this box in both
-    * variants (DevProbe bench-mimic, same session ordering): HLL-in-rollup
+    * variants (`graft.Dev time` bench-mimic, same session ordering): HLL-in-rollup
     * 3.38 s first-run / ~1.6 s steady; HLL-as-scalar-subquery + integer
     * col key 3.59 s / ~2.0-2.5 s; the 5-scan form 1.6-1.8 s bench /
     * ~1.0 s steady. The unpivot's (col, value)-keyed pre-aggregate pushes
@@ -2008,7 +2008,7 @@ object Extensions {
     * any downstream stage, and the q46-family sketches skip empties
     * anyway).
     */
-  /** x114 driver query (r15/r16): the SQL-text formulation's `pos` CTE (the
+  /** x114 driver query: the SQL-text formulation's `pos` CTE (the
     * 5-gram stream) is consumed twice — the df-threshold aggregate AND
     * the matched-position collect — and CTE inlining recomputes it per
     * use. This DataFrame form derives the gram stream ONCE through
@@ -2016,11 +2016,11 @@ object Extensions {
     * / intermediate table) and both consumers read the materialized
     * blocks. Grams come from the codegen word_ngrams kernel; the per-doc
     * tail (covered-position cover of the matched grams, kept-token count,
-    * position-tagged md5) is the fused boilerplate_strip kernel (r16 —
-    * value parity with the old explode + anti-join + sort-collect shape
+    * position-tagged md5) is the fused boilerplate_strip kernel (value
+    * parity with the old explode + anti-join + sort-collect shape
     * pinned in BoilerplateSpec), and the DuckDB twin still pins the exact
     * surviving tokens. */
-  /** x78 driver query (r16): the SQL-text formulation's token stream `t`
+  /** x78 driver query: the SQL-text formulation's token stream `t`
     * is referenced three times (vocabulary aggregate, global token count,
     * per-doc scoring join) and CTE inlining re-derived the corpus explode
     * per reference. This form materializes the VOCABULARY (Zipfian —
@@ -2056,7 +2056,7 @@ object Extensions {
     out
   }
 
-  /** x106 driver query (r16): the SQL-text formulation re-derived the
+  /** x106 driver query: the SQL-text formulation re-derived the
     * token frame per reference (unigram aggregate AND bigram stream) and
     * the bigram stream per reference (bigram aggregate AND scoring join)
     * — 22 exchanges / 3 corpus scans
@@ -2107,7 +2107,7 @@ object Extensions {
     out
   }
 
-  /** x79 driver query (r16): the SQL-text formulation's token stream `t`
+  /** x79 driver query: the SQL-text formulation's token stream `t`
     * is referenced three times (tf, df, and the doc-count scalar) and CTE
     * inlining re-derived the corpus explode per reference. This form
     * materializes the (doc, token, tf) frame once — the same rows the tf
@@ -2147,7 +2147,7 @@ object Extensions {
     out
   }
 
-  /** x85 driver query (r16): the SQL-text formulation derived the token
+  /** x85 driver query: the SQL-text formulation derived the token
     * position stream three times and the bigram stream twice (CTE
     * inlining), and built bigrams through a per-doc `lead` WINDOW — a
     * full exchange + sort of the corpus token stream predating the
@@ -2204,11 +2204,11 @@ object Extensions {
     out
   }
 
-  /** x98 driver query (r16): the SQL-text formulation re-derived the
+  /** x98 driver query: the SQL-text formulation re-derived the
     * corpus token aggregate per CTE reference — the before-plan has 12
     * parquet scans / 6 corpus explodes for what is ONE vocabulary-sized
     * statistic (plans/r16/x98_dsir_sample_before.txt). This DataFrame
-    * form (a) fuses the src/tgt aggregates (the Q-text r16 change — tgt's
+    * form (a) fuses the src/tgt aggregates (as the Q text does — tgt's
     * count rides as a conditional COUNT column) and (b) materializes the
     * fused vocabulary frame once (it is Zipfian-vocabulary-sized — tiny
     * at any corpus scale); the log-ratio table, the per-doc scoring join
@@ -2260,7 +2260,7 @@ object Extensions {
     out
   }
 
-  /** x110 driver query (r16): the SQL-text formulation's `b` CTE (the
+  /** x110 driver query: the SQL-text formulation's `b` CTE (the
     * DISTINCT (user, day, event_type) basket stream) is referenced FOUR
     * times — the basket count, the per-item counts, and both sides of the
     * pair self-join — and Spark's CTE inlining recomputed it per
@@ -2321,7 +2321,7 @@ object Extensions {
         |LATERAL VIEW posexplode(word_ngrams(tk, 5)) AS p, gram""".stripMargin)
       .stageMaterialize
       .createOrReplaceTempView("__x114_pos")
-    // r16: everything after the df-threshold decision is a pure function of
+    // Everything after the df-threshold decision is a pure function of
     // (doc's token array, its matched gram start positions), so the old
     // covered-position explode (5× gram-stream blowup) + DISTINCT + the
     // full corpus token-position anti-join + the per-doc sort-collect md5

@@ -70,42 +70,10 @@ object Stages {
     }
   }
 
-  /** Dev-only plan evidence hook (r16): `-Dgraft.stageExplainDir=<dir>`
-    * writes each materialized stage's `.explain("formatted")` to
-    * `<dir>/stage-NNN.txt` before it runs — the pipeline-internal plans
-    * (x54/x57/x75 candidate stages…) are invisible in a final query's
-    * explain because the checkpoint cuts the lineage. No cost when the
-    * property is unset. */
-  private val explainCounter = new AtomicLong(0)
-  private def maybeExplain(df: DataFrame): Unit =
-    sys.props.get("graft.stageExplainDir").foreach { d =>
-      val dir = java.nio.file.Paths.get(d)
-      Files.createDirectories(dir)
-      val txt = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      Files.write(dir.resolve(
-        f"stage-${explainCounter.incrementAndGet()}%03d.txt"),
-        txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }
-
   /** Materialize `df` under the session's configured strategy and return
     * the stage-cut frame. Eager in all modes (the stage computes once,
     * here, not lazily per downstream consumer). */
-  def materialize(df: DataFrame): DataFrame = {
-    maybeExplain(df)
-    // Dev-only stage timing (r16): -Dgraft.stageTimeLog prints seconds per
-    // materialized stage to stderr, numbered in step with stageExplainDir.
-    if (sys.props.contains("graft.stageTimeLog")) {
-      val n = explainCounter.get()
-      val t0 = System.nanoTime()
-      val out = materialize0(df)
-      System.err.println(
-        f"[stage $n%03d] ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      out
-    } else materialize0(df)
-  }
-
-  private def materialize0(df: DataFrame): DataFrame = mode match {
+  def materialize(df: DataFrame): DataFrame = mode match {
     case "local" => df.localCheckpoint()
     case "reliable" =>
       val sc = df.sparkSession.sparkContext
@@ -141,7 +109,7 @@ object Stages {
   }
 
   // ---------------------------------------------------------------------
-  // Session-level shared-stage registry (VERDICT r9 next-round #4).
+  // Session-level shared-stage registry.
   //
   // Several driver rows branch off the SAME corpus-scale intermediate:
   // x54/x75/x108 all need the PPJoin unigram pair set, x104/x105/x109 all
@@ -173,8 +141,8 @@ object Stages {
   // so two concurrent builds in one session could drop/re-register each
   // other's views). ReentrantLock, so a build composing [[shared]] for its
   // own inputs (same thread) re-enters freely; distinct sessions never
-  // contend. The lock lives INSIDE the weak per-session identity entry
-  // (ADVICE r11): its lifetime is exactly the session's — no explicit
+  // contend. The lock lives INSIDE the weak per-session identity entry:
+  // its lifetime is exactly the session's — no explicit
   // removal ever happens, so invalidate() can't yank a lock out from under
   // an in-flight build (which would let a fresh lock admit a second
   // concurrent build in the same session), and a service churning

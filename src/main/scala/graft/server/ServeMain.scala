@@ -1,20 +1,15 @@
 package graft.server
 
+import graft.Sessions
 import graft.engine.GraftDb
-import org.apache.spark.sql.SparkSession
 
 /** Standalone server entrypoint: `runMain graft.server.ServeMain [port]
-  * [dbDir]` — dbDir omitted = in-memory (the reference's default mode). */
+  * [dbDir]` — dbDir omitted = in-memory (the reference's default mode).
+  * The session comes from [[Sessions.driver]] like every main's. */
 object ServeMain {
   def main(args: Array[String]): Unit = {
     val port = args.headOption.map(_.toInt).getOrElse(4001)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.driver()
     val db = args.lift(1) match {
       case Some(dir) => GraftDb.open(spark, dir).fold(e => sys.error(e), identity)
       case None => GraftDb.openInMemory(spark)

@@ -12,7 +12,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * with no public hook between the two. The parser and `Dataset.ofRows`
   * are `private[sql]`, hence this one deliberate shim next to
   * [[SessionFunctions]]. Everything else (the rewrite itself, the custom
-  * expressions) is ordinary Catalyst extension material.
+  * expressions) is ordinary Catalyst extension material. The same seam
+  * holds [[awaitListeners]], which `graft.Dev` needs to attribute the
+  * listener-reported stages to the row that ran them.
   */
 object GraftSql {
 
@@ -28,4 +30,10 @@ object GraftSql {
     * `session.sql`. */
   def ofRows(session: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(cs(session), plan)
+
+  /** Block until the (asynchronous, `private[spark]`) listener bus has
+    * delivered every event posted so far, so a QueryExecutionListener has
+    * seen every action that already returned. */
+  def awaitListeners(session: SparkSession): Unit =
+    session.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -16,7 +16,7 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-exec env GRAFT_JAR="$JAR" java $ADD_OPENS \
+exec java $ADD_OPENS \
   -Xmx${CRASH_MEM:-6g} -XX:ReservedCodeCacheSize=512m \
   -Dspark.ui.enabled=false \
   -cp "$JAR:/opt/spark/jars/*" \
